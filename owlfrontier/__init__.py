@@ -16,12 +16,17 @@ byte-identical extractor), ``owlfrontier.simulate`` (the oracle),
 ``owlfrontier.robots``.
 """
 
+from owlfrontier import zipguard
 from owlfrontier.crawler import CrawlConfig, CrawlEngine  # noqa: F401
 from owlfrontier.extract import extract_full, extraction_udf  # noqa: F401
 from owlfrontier.simulate import (  # noqa: F401
     simulate_fifo,
     simulate_generations,
 )
+
+# a Python worker that unpickles any engine UDF imports this package, and
+# from then on keeps its zip-import index across tasks (see zipguard.py)
+zipguard.install()
 
 __all__ = [
     "CrawlConfig",

@@ -5,7 +5,9 @@ Reference steady state: NATS ``fetch_url``/``extract_url`` FIFO subjects with
 competing consumers (``/root/reference/fetcher.go:86-104``,
 ``/root/reference/extractor.go:94-109``), CouchDB as both store and seen-set
 (``/root/reference/couchdb/couchdb.go:143-179,254-280``). Here each
-generation is one Spark job:
+generation is one checkpointed step: a crawled write and a frontier
+write, each several Spark jobs (AQE runs every shuffle stage as its own
+job), plus a Bloom build or postings write when those are on:
 
     gen(g):  F_g = committed frontier snapshot           (clean: see enqueue)
       1. robots:     minus disallowed(host, path)        (north_rule addition)
@@ -285,9 +287,9 @@ class CrawlEngine:
                          metrics) -> dict:
         cfg = self.config
         while g < cfg.max_generations:
-            t_gen = time.time()
+            t_gen = time.perf_counter()
             m = self._generation(frontier, g, crawled_gens, frontier_size)
-            m["wall_sec"] = round(time.time() - t_gen, 2)
+            m["wall_sec"] = round(time.perf_counter() - t_gen, 2)
             metrics.append(m)
             if m["fetched"] > 0:
                 crawled_gens.append(g)
@@ -769,11 +771,11 @@ class CrawlEngine:
             F.count(F.lit(1)).alias("fetched"),
             F.count("parsed_on").alias("parsed"),
         )
-        t = time.time()
+        t = time.perf_counter()
         self.store.write_gen(crawled_g, "crawled", g)
         counts = obs_c.get
         fetched_count, parsed_count = counts["fetched"], counts["parsed"]
-        timings = {"crawled_write": round(time.time() - t, 2)}
+        timings = {"crawled_write": round(time.perf_counter() - t, 2)}
         crawled_g = self.store.read_gen("crawled", g)
 
         # O14 incremental index maintenance: tokenize ONLY this
@@ -783,17 +785,17 @@ class CrawlEngine:
         if cfg.maintain_index and fetched_count:
             from owlfrontier.search import postings_from_crawled
 
-            t = time.time()
+            t = time.perf_counter()
             self.store.write_gen(
                 postings_from_crawled(crawled_g), "postings", g
             )
-            timings["postings_write"] = round(time.time() - t, 2)
+            timings["postings_write"] = round(time.perf_counter() - t, 2)
 
         # incremental Bloom maintenance — BEFORE expansion, so the
         # expansion prefilter already covers generation g's URLs. Fixed
         # geometry (sized at activation) makes every per-generation filter
         # union-compatible — Bloom union is bitwise OR (SURVEY.md §4.3.1)
-        t = time.time()
+        t = time.perf_counter()
         self._crawled_count += fetched_count
         if self._bloom_enabled() and fetched_count:
             if self._bloom is None and crawled_gens:
@@ -805,7 +807,7 @@ class CrawlEngine:
             else:
                 add = self._build_bloom(crawled_g)
             self._bloom = add if self._bloom is None else self._bloom.union(add)
-        timings["bloom"] = round(time.time() - t, 2)
+        timings["bloom"] = round(time.perf_counter() - t, 2)
 
         # O13: frontier expansion — posexplode preserves document order
         candidates = crawled_g.select(
@@ -823,11 +825,11 @@ class CrawlEngine:
         pool = self._canonical_ingress(candidates)
         if deferred is not None:
             pool = deferred.unionByName(pool)
-        t = time.time()
+        t = time.perf_counter()
         next_count = self._enqueue(
             pool, crawled_gens + ([g] if fetched_count else []), g + 1
         )
-        timings["frontier_write"] = round(time.time() - t, 2)
+        timings["frontier_write"] = round(time.perf_counter() - t, 2)
         partition_hist = None
         if cfg.partition_hist and not cfg.light_metrics:
             # per-partition lineage/metrics (north_rule): row spread of the

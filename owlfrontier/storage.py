@@ -34,6 +34,8 @@ import json
 import os
 import shutil
 
+from pyspark.sql.types import StructType
+
 
 class SnapshotStore:
     """Directory layout::
@@ -55,6 +57,16 @@ class SnapshotStore:
         # default. Reads are codec-transparent.
         self.codec = codec
         os.makedirs(root, exist_ok=True)
+        # table → the Spark schema of its generations. Reads pass it to
+        # the Parquet reader, so no read submits a schema-inference job.
+        # A table has one schema, as an Iceberg table does; write_gen
+        # records it, and the commit carries it to the next store object
+        # over this root (resume, add_seeds on a new engine)
+        self._schemas = {
+            table: StructType.fromJson(schema)
+            for table, schema in
+            (self.read_manifest() or {}).get("schemas", {}).items()
+        }
 
     # -- manifest ---------------------------------------------------------
 
@@ -75,6 +87,7 @@ class SnapshotStore:
             "generation": generation,
             "frontier_empty": frontier_empty,
             "crawled_generations": crawled_gens,
+            "schemas": {t: s.jsonValue() for t, s in self._schemas.items()},
         }
         tmp = self._manifest_path() + ".tmp"
         with open(tmp, "w") as f:
@@ -110,9 +123,19 @@ class SnapshotStore:
             os.rename(target, old)
         os.rename(aside, target)
         shutil.rmtree(old, ignore_errors=True)
+        self._schemas[table] = df.schema
+
+    def _read(self, table: str, paths: list[str]):
+        schema = self._schemas.get(table)
+        if schema is None:
+            # committed before the store recorded schemas: infer once
+            df = self.spark.read.parquet(*paths)
+            self._schemas[table] = df.schema
+            return df
+        return self.spark.read.schema(schema).parquet(*paths)
 
     def read_gen(self, table: str, gen: int):
-        return self.spark.read.parquet(self._gen_dir(table, gen))
+        return self._read(table, [self._gen_dir(table, gen)])
 
     def read_gens(self, table: str, gens: list[int]):
         """Union of the given committed generations of ``table``
@@ -127,7 +150,7 @@ class SnapshotStore:
         ]
         if not paths:
             return None
-        return self.spark.read.parquet(*paths)
+        return self._read(table, paths)
 
     def read_crawled(self, gens: list[int]):
         return self.read_gens("crawled", gens)

@@ -86,7 +86,9 @@ class FakeIcebergSession:
         return self.real.createDataFrame(*args, **kwargs)
 
     def table(self, name: str):
-        return self.real.read.parquet(self.tables[name]["path"])
+        # catalog-typed, like Iceberg: reading submits no inference job
+        meta = self.tables[name]
+        return self.real.read.schema(meta["schema"]).parquet(meta["path"])
 
     # -- statement parser (the five shapes IcebergStore issues) -----------
 
@@ -146,13 +148,15 @@ class FakeIcebergSession:
         schema = df.schema
         out = self.real.createDataFrame(rows, schema)
         out.write.mode("overwrite").parquet(self.tables[name]["path"])
+        self.tables[name]["schema"] = schema
 
     def _create(self, name: str, df, parts: tuple) -> None:
         if name in self.tables:
             raise ValueError(f"table {name} already exists")
         path = self._path(name)
         df.write.mode("overwrite").parquet(path)
-        self.tables[name] = {"path": path, "parts": tuple(parts)}
+        self.tables[name] = {"path": path, "parts": tuple(parts),
+                             "schema": df.schema}
 
     def _align(self, name: str, df):
         """Iceberg v2 writes resolve columns BY NAME against the table

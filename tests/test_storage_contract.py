@@ -5,6 +5,8 @@ this sandbox) — the contract body is shared, so the Iceberg path is covered
 by the identical assertions the moment the jar is present.
 """
 
+import datetime
+import itertools
 import re
 
 import pytest
@@ -23,8 +25,46 @@ def _mk_df(spark, urls, extra=0):
     )
 
 
-def _contract(spark, store):
-    """The full seam contract the CrawlEngine depends on."""
+_groups = itertools.count()
+
+
+def _jobs(spark, read):
+    """→ (read(), the number of Spark jobs it submitted), counted with a
+    job group and the status tracker."""
+    sc = spark.sparkContext
+    group = f"store-read-{next(_groups)}"
+    sc.setJobGroup(group, "store read")
+    try:
+        out = read()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+# the engine's column shapes: FIFO path, timestamps (one null), lists
+_TYPED_SCHEMA = (
+    "url string, path array<bigint>, fetched_on timestamp, "
+    "parsed_on timestamp, text array<string>, gen_fetched int"
+)
+_TYPED_ROWS = [
+    ("u1", [0, 3], datetime.datetime(2026, 1, 2, 3, 4, 5),
+     datetime.datetime(2026, 1, 2, 3, 4, 5), ["a", "b"], 0),
+    ("u2", [1], datetime.datetime(2026, 2, 1), None, [], 0),
+]
+
+
+def _assert_reads_typed(spark, store, written):
+    back, jobs = _jobs(spark, lambda: store.read_gen("typed", 0))
+    assert jobs == 0
+    assert [f.dataType for f in back.schema] == [
+        f.dataType for f in written.schema
+    ]
+    assert sorted(back.collect()) == sorted(written.collect())
+
+
+def _contract(spark, store, reopen):
+    """The full seam contract the CrawlEngine depends on. ``reopen()``
+    returns a new store object over the same tables."""
     # fresh store: no manifest, no metrics, no crawled data
     assert store.read_manifest() is None
     assert store.read_metrics() == []
@@ -36,6 +76,17 @@ def _contract(spark, store):
     store.write_gen(_mk_df(spark, ["c", "d", "e"], extra=10), "crawled", 1)
     assert {r["url"] for r in store.read_gen("frontier", 0).collect()} == {"a", "b"}
     assert {r["url"] for r in store.read_gen("crawled", 1).collect()} == {"c", "d", "e"}
+
+    # reads are typed: building a read submits no Spark job (no schema
+    # inference), for one generation and for a union of generations
+    assert _jobs(spark, lambda: store.read_gen("frontier", 0))[1] == 0
+    assert _jobs(spark, lambda: store.read_crawled([0, 1]))[1] == 0
+    assert _jobs(spark, lambda: store.read_gens("crawled", [0, 1]))[1] == 0
+
+    # typed reads keep the written rows and column types
+    typed = spark.createDataFrame(_TYPED_ROWS, _TYPED_SCHEMA)
+    store.write_gen(typed, "typed", 0)
+    _assert_reads_typed(spark, store, typed)
 
     # write_gen may replace a generation from a plan that READS that same
     # generation (add_seeds re-enqueues the pending frontier into itself)
@@ -66,6 +117,13 @@ def _contract(spark, store):
     assert m["crawled_generations"] == [0, 1]
     assert store.read_metrics() == metrics
 
+    # a new store object over the committed tables reads typed as well
+    fresh = reopen()
+    got, jobs = _jobs(spark, lambda: fresh.read_crawled([0, 1]))
+    assert jobs == 0
+    assert {r["url"] for r in got.collect()} == {"a", "z", "c", "d", "e"}
+    _assert_reads_typed(spark, fresh, typed)
+
     # a later commit supersedes (latest snapshot wins)
     store.commit(2, metrics + [{"generation": 2, "fetched": 0}],
                  frontier_empty=True, crawled_gens=[0, 1])
@@ -87,7 +145,9 @@ def _contract(spark, store):
 
 
 def test_snapshot_store_contract(spark, tmp_path):
-    _contract(spark, SnapshotStore(spark, str(tmp_path / "seam")))
+    root = str(tmp_path / "seam")
+    _contract(spark, SnapshotStore(spark, root),
+              lambda: SnapshotStore(spark, root))
 
 
 def test_snapshot_store_drops_crash_leftovers(spark, tmp_path):
@@ -111,10 +171,68 @@ def test_snapshot_store_drops_crash_leftovers(spark, tmp_path):
     assert [r["url"] for r in store.read_gen("frontier", 1).collect()] == ["b"]
 
 
+def test_snapshot_store_typed_reads_match_inferred(spark, tmp_path):
+    """Over a committed crawl, a new SnapshotStore reads every table with
+    the schema the manifest carries: no job, and the same rows and column
+    types as Spark's schema inference gives. A manifest committed before
+    the store recorded schemas infers once per table, then remembers."""
+    import json
+    import os
+
+    from owlfrontier.crawler import CrawlConfig, CrawlEngine
+    from owlfrontier.fixtures import gen_site, pages_df
+
+    rows, seeds = gen_site(n_pages=12, n_hosts=2, seed=3)
+    root = str(tmp_path / "store")
+    eng = CrawlEngine(spark, pages_df(spark, rows), root,
+                      config=CrawlConfig(salt_buckets=2, frontier_partitions=2,
+                                         use_bloom=False, maintain_index=True,
+                                         max_generations=2))
+    eng.run(seeds=seeds)
+    manifest = eng.store.read_manifest()
+    gens = manifest["crawled_generations"]
+    assert sorted(manifest["schemas"]) == ["crawled", "frontier", "postings"]
+    reads = {
+        "crawled": lambda st: st.read_crawled(gens),
+        "postings": lambda st: st.read_gens("postings", gens),
+        "frontier": lambda st: st.read_gen("frontier",
+                                           manifest["generation"] + 1),
+    }
+    fresh = SnapshotStore(spark, root)
+    for table, read in reads.items():
+        typed, jobs = _jobs(spark, lambda: read(fresh))
+        assert jobs == 0, table
+        inferred = spark.read.parquet(*typed.inputFiles())
+        assert [(f.name, f.dataType) for f in typed.schema] == [
+            (f.name, f.dataType) for f in inferred.schema
+        ], table
+        assert sorted(map(repr, typed.collect())) == sorted(
+            map(repr, inferred.collect())
+        ), table
+    dtypes = dict(fresh.read_crawled(gens).dtypes)
+    assert dtypes["path"] == "array<bigint>"
+    assert dtypes["fetched_on"] == dtypes["parsed_on"] == "timestamp"
+
+    # a manifest without schemas (an older store): one inference per table
+    path = os.path.join(root, "manifest.json")
+    with open(path) as f:
+        old = json.load(f)
+    old.pop("schemas")
+    with open(path, "w") as f:
+        json.dump(old, f)
+    legacy = SnapshotStore(spark, root)
+    first, jobs = _jobs(spark, lambda: legacy.read_crawled(gens))
+    assert jobs >= 1  # the inference job this change removes elsewhere
+    again, jobs = _jobs(spark, lambda: legacy.read_gen("crawled", gens[0]))
+    assert jobs == 0
+    assert again.schema == first.schema
+
+
 def test_iceberg_store_contract(spark):
     if not iceberg_available(spark):
         pytest.skip("iceberg-spark-runtime not on the classpath")
-    _contract(spark, IcebergStore(spark, "spark_catalog.owl_contract"))
+    _contract(spark, IcebergStore(spark, "spark_catalog.owl_contract"),
+              lambda: IcebergStore(spark, "spark_catalog.owl_contract"))
 
 
 def _fake_iceberg(spark, tmp_path, monkeypatch):
@@ -133,7 +251,7 @@ def test_iceberg_store_contract_offline(spark, tmp_path, monkeypatch):
     The transcript assertion pins the statement/write protocol shapes."""
     fake = _fake_iceberg(spark, tmp_path, monkeypatch)
     store = IcebergStore(fake, "fakecat.owl")
-    _contract(spark, store)
+    _contract(spark, store, lambda: IcebergStore(fake, "fakecat.owl"))
     t = "\n".join(fake.transcript)
     assert "CREATE NAMESPACE IF NOT EXISTS fakecat.owl" in t
     assert "WRITETO fakecat.owl.frontier CREATE partitionedBy=['generation']" in t
